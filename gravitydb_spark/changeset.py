@@ -35,7 +35,7 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
-from .graph import PropertyGraph, _cut
+from .graph import PropertyGraph, _cut, local_frame
 
 __all__ = [
     "MergeConflictError",
@@ -211,7 +211,7 @@ def change_from_json(spark, payload: str) -> dict:
     data = json.loads(payload)
 
     def df(rows, schema):
-        return spark.createDataFrame([tuple(r) for r in rows], schema)
+        return local_frame(spark, rows, schema)
 
     node_s = "id string, prop_hash string"
     edge_s = "edge_id string, src string, dst string, prop_hash string"

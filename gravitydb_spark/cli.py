@@ -22,7 +22,7 @@ import json
 import os
 import sys
 
-from .graph import PropertyGraph
+from .graph import PropertyGraph, local_frame
 from .hashing import prop_hash
 from .plans.compiler import execute
 from .ql import query_from_json
@@ -210,7 +210,7 @@ def cmd_result_data(args) -> int:
     def enrich(ids: list, table, key: str) -> list:
         if not ids:
             return []
-        id_df = spark.createDataFrame([(i,) for i in ids], f"{key} string")
+        id_df = local_frame(spark, [(i,) for i in ids], f"{key} string")
         rows = (
             table.join(F.broadcast(id_df), key)
             .join(g.properties, "prop_hash", "left")

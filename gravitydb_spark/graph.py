@@ -36,12 +36,14 @@ import uuid
 from dataclasses import dataclass
 from typing import Iterable, Optional, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .hashing import canonical_json, edge_hash, tagged_property
 from .schema import DEFAULT_SCHEMA, Prop, Schema
 
-__all__ = ["PropertyGraph", "GraphBatchBuilder", "NodeExistsError"]
+__all__ = ["PropertyGraph", "GraphBatchBuilder", "NodeExistsError", "local_frame"]
 
 VERTICES_SCHEMA = T.StructType(
     [
@@ -74,6 +76,33 @@ PROP_REFS_SCHEMA = T.StructType(
 )
 
 _TABLES = ("vertices", "edges", "properties", "prop_refs")
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` as a JVM-local relation.
+
+    The rows are packed column-wise into a ``pyarrow.Table``, which
+    Spark turns into a Catalyst ``LocalRelation``. A plain
+    ``createDataFrame(list, schema)`` instead gives a ``LogicalRDD`` over
+    pickled rows, and every stage that scans it starts Python-worker
+    tasks: a CRUD commit spent most of its time waiting on them. Every
+    literal frame the library builds goes through here.
+
+    The schema (a ``StructType`` or a DDL string) is kept exactly,
+    nullability included; a NULL in a non-nullable field raises, as the
+    list path's schema check does.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class NodeExistsError(Exception):
@@ -138,10 +167,10 @@ class PropertyGraph:
     def empty(spark: SparkSession, schema: Schema | None = None) -> "PropertyGraph":
         return PropertyGraph(
             spark,
-            spark.createDataFrame([], VERTICES_SCHEMA),
-            spark.createDataFrame([], EDGES_SCHEMA),
-            spark.createDataFrame([], PROPERTIES_SCHEMA),
-            spark.createDataFrame([], PROP_REFS_SCHEMA),
+            local_frame(spark, [], VERTICES_SCHEMA),
+            local_frame(spark, [], EDGES_SCHEMA),
+            local_frame(spark, [], PROPERTIES_SCHEMA),
+            local_frame(spark, [], PROP_REFS_SCHEMA),
             schema or DEFAULT_SCHEMA,
         )
 
@@ -232,7 +261,7 @@ class PropertyGraph:
     def node_adjacency(self, vertex_ids: Sequence[str]) -> DataFrame:
         """Derived incoming/outgoing edge sets (the reference materializes
         these on the node record; we derive them with one pass over edges)."""
-        ids = self.spark.createDataFrame([(v,) for v in vertex_ids], "id string")
+        ids = local_frame(self.spark, [(v,) for v in vertex_ids], "id string")
         out = (
             self.edges.join(F.broadcast(ids), F.col("src") == F.col("id"))
             .select("id", F.col("edge_id"), F.lit("outgoing").alias("direction"))
@@ -246,7 +275,14 @@ class PropertyGraph:
     # -- CRUD (GraphStore, kv_graph_store.rs:531-752) ------------------------
 
     def _assert_new_node_ids(self, ids: list[str]) -> None:
-        ids_df = self.spark.createDataFrame([(i,) for i in ids], "id string")
+        # the reference creates nodes one at a time, so a repeated id in
+        # one batch fails on its second create
+        seen: set[str] = set()
+        for i in ids:
+            if i in seen:
+                raise NodeExistsError(f"node {i} already exists")
+            seen.add(i)
+        ids_df = local_frame(self.spark, [(i,) for i in ids], "id string")
         clash = self.vertices.join(F.broadcast(ids_df), "id", "leftsemi").limit(1).collect()
         if clash:
             raise NodeExistsError(f"node {clash[0]['id']} already exists")
@@ -278,7 +314,7 @@ class PropertyGraph:
         hits, fresh for misses)."""
         items = list(items)
         hashes = list({p.hash for _, p in items})
-        h_df = self.spark.createDataFrame([(h,) for h in hashes], "prop_hash string")
+        h_df = local_frame(self.spark, [(h,) for h in hashes], "prop_hash string")
         existing = {
             r["prop_hash"]: r["ref_id"]
             for r in self.prop_refs.filter(F.col("ref_kind") == "node")
@@ -310,13 +346,13 @@ class PropertyGraph:
         self, items: Iterable[tuple[str, Prop]]
     ) -> "PropertyGraph":
         """Batch update_node (kv_graph_store.rs:555-582): swap the node's
-        property; old property rows become garbage collected by ``gc()``."""
-        items = list(items)
+        property; old property rows become garbage collected by ``gc()``.
+        A node updated twice in one batch keeps its last property, as the
+        reference's one-at-a-time updates would leave it."""
+        items = list({vid: (vid, prop) for vid, prop in items}.values())
         # reference semantics: updating a nonexistent node is an error
         # (update_node does read_node first, kv_graph_store.rs:555-560)
-        ids_df = self.spark.createDataFrame(
-            [(vid,) for vid, _ in items], "id string"
-        )
+        ids_df = local_frame(self.spark, [(vid,) for vid, _ in items], "id string")
         missing = ids_df.join(self.vertices, "id", "leftanti").limit(1).collect()
         if missing:
             raise KeyError(f"update_nodes: node {missing[0]['id']} does not exist")
@@ -355,7 +391,7 @@ class PropertyGraph:
         *documented* behavior (docs/key_value_store.adoc:543-544); the
         reference code leaves them dangling (kv_graph_store.rs:584-602) —
         pass ``cascade=False`` to replicate that."""
-        ids = self.spark.createDataFrame([(v,) for v in vertex_ids], "id string")
+        ids = local_frame(self.spark, [(v,) for v in vertex_ids], "id string")
         vertices = self.vertices.join(F.broadcast(ids), "id", "leftanti")
         refs_gone = self.prop_refs.join(
             F.broadcast(ids.select(F.col("id").alias("ref_id"))), "ref_id", "leftanti"
@@ -413,7 +449,7 @@ class PropertyGraph:
         return self._with(edges=edges, prop_refs=prop_refs)
 
     def delete_edges(self, edge_ids: Sequence[str]) -> "PropertyGraph":
-        ids = self.spark.createDataFrame([(e,) for e in edge_ids], "edge_id string")
+        ids = local_frame(self.spark, [(e,) for e in edge_ids], "edge_id string")
         return self._delete_edges_df(ids)
 
     def gc(self, max_iters: int = 10) -> "PropertyGraph":
@@ -547,6 +583,12 @@ class GraphBatchBuilder:
     For bulk ingest from existing DataFrames use
     ``gravitydb_spark.sources.ingest`` instead — this builder is for
     fixtures, tests, and small CRUD batches.
+
+    ``frames`` emits JVM-local relations (:func:`local_frame`). They are
+    about 2× faster to build, aggregate and join than pickled-row frames
+    at 1k–30k rows. At 300k rows they still build faster (0.4 s vs
+    0.9 s), but every re-scan is about 2× slower (an aggregate took
+    0.9 s vs 0.45 s), so batches that large belong on the bulk path.
     """
 
     def __init__(self, schema: Schema | None = None):
@@ -581,10 +623,10 @@ class GraphBatchBuilder:
         self, spark: SparkSession
     ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
         return (
-            spark.createDataFrame(self._vertices, VERTICES_SCHEMA),
-            spark.createDataFrame(list(self._edges.values()), EDGES_SCHEMA),
-            spark.createDataFrame(list(self._properties.values()), PROPERTIES_SCHEMA),
-            spark.createDataFrame(sorted(self._prop_refs), PROP_REFS_SCHEMA),
+            local_frame(spark, self._vertices, VERTICES_SCHEMA),
+            local_frame(spark, self._edges.values(), EDGES_SCHEMA),
+            local_frame(spark, self._properties.values(), PROPERTIES_SCHEMA),
+            local_frame(spark, sorted(self._prop_refs), PROP_REFS_SCHEMA),
         )
 
     def build(self, spark: SparkSession) -> PropertyGraph:

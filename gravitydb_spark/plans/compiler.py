@@ -40,7 +40,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..graph import PropertyGraph
+from ..graph import PropertyGraph, local_frame
 from ..ql import (
     BasicQuery,
     EdgeQuery,
@@ -354,8 +354,7 @@ class _Compiler:
         if q.kind == "All":
             return _Compiled(g.vertices.select("id", _empty_path(), _null_start()))
         if q.kind == "Specific":
-            ids = [(i,) for i in q.args[0]]
-            df = g.spark.createDataFrame(ids, "id string")
+            df = local_frame(g.spark, [(i,) for i in q.args[0]], "id string")
             # the reference builds contexts without a store lookup
             # (kv_graph_store.rs:151-155) — nonexistent ids pass through
             return _Compiled(df.select("id", _empty_path(), _null_start()))
@@ -434,8 +433,7 @@ class _Compiler:
                 )
             )
         if q.kind == "Specific":
-            ids = [(i,) for i in q.args[0]]
-            df = g.spark.createDataFrame(ids, "id string")
+            df = local_frame(g.spark, [(i,) for i in q.args[0]], "id string")
             # left join: unknown edge ids still appear in the result set
             # (contexts are built without a lookup, kv_graph_store.rs:229-233)
             frontier = (
@@ -656,7 +654,7 @@ def execute(graph: PropertyGraph, query) -> QueryResult:
     q = BasicQuery.of(query)
     comp = _Compiler(graph)
     spark = graph.spark
-    empty_ids = spark.createDataFrame([], "id string")
+    empty_ids = local_frame(spark, [], "id string")
 
     if q.kind == "V":
         c = comp.compile_vq(q.query)
@@ -680,8 +678,8 @@ def execute(graph: PropertyGraph, query) -> QueryResult:
         return QueryResult(graph, vertices, edges, paths)
     if q.kind == "P":
         props = comp.compile_pq(q.query).distinct()
-        empty_paths = spark.createDataFrame(
-            [], f"start string, path {PATH_TYPE.replace(':', ' ')}, end string"
+        empty_paths = local_frame(
+            spark, [], f"start string, path {PATH_TYPE.replace(':', ' ')}, end string"
         )
         return QueryResult(graph, empty_ids, empty_ids, empty_paths, properties=props)
     raise ValueError(f"unknown BasicQuery kind: {q.kind}")

@@ -15,6 +15,22 @@ from pyspark.sql import SparkSession
 __all__ = ["get_spark"]
 
 
+def _default_driver_memory() -> str:
+    """``min(24g, half of physical memory)``: a fixed 24g heap on a
+    smaller host lets the driver JVM outgrow the machine and be killed.
+    Falls back to 24g where ``/proc/meminfo`` is unreadable."""
+    cap_mb = 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    cap_mb = min(cap_mb, int(line.split()[1]) // 1024 // 2)
+                    break
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "gravitydb_spark",
     master: str | None = None,
@@ -36,7 +52,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -23,6 +23,7 @@ from ..graph import (
     PROPERTIES_SCHEMA,
     PropertyGraph,
     VERTICES_SCHEMA,
+    local_frame,
 )
 from ..schema import SCHEMA_TYPE, Prop, Schema
 
@@ -113,7 +114,7 @@ def _prop_table(
                 tag_props.append(
                     (child.hash, child.schema_type, child.value_json, child.tagged_json)
                 )
-    tags_df = spark.createDataFrame(tag_props, PROPERTIES_SCHEMA).dropDuplicates(
+    tags_df = local_frame(spark, tag_props, PROPERTIES_SCHEMA).dropDuplicates(
         ["prop_hash"]
     )
     # nesting refs: each value-property references its type tag
@@ -123,14 +124,14 @@ def _prop_table(
     }
     mapping_rows = [(t, h) for t, hs in tag_hash_map.items() for h in hs]
     if mapping_rows:
-        mapping = spark.createDataFrame(mapping_rows, "schema_type string, tag_hash string")
+        mapping = local_frame(spark, mapping_rows, "schema_type string, tag_hash string")
         nest_refs = distinct_props.join(F.broadcast(mapping), "schema_type").select(
             F.col("tag_hash").alias("prop_hash"),
             F.lit("prop").alias("ref_kind"),
             F.col("prop_hash").alias("ref_id"),
         )
     else:
-        nest_refs = spark.createDataFrame([], PROP_REFS_SCHEMA)
+        nest_refs = local_frame(spark, [], PROP_REFS_SCHEMA)
     return distinct_props.unionByName(tags_df).dropDuplicates(["prop_hash"]), nest_refs
 
 
@@ -152,7 +153,9 @@ def ingest_graph(
     """
     schema = schema or Schema()
     if edges is None:
-        edges = spark.createDataFrame([], "src string, dst string, schema_type string, payload string")
+        edges = local_frame(
+            spark, [], "src string, dst string, schema_type string, payload string"
+        )
 
     v = vertices.withColumn(
         "prop_hash",

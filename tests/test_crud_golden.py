@@ -44,6 +44,30 @@ def test_create_node_twice_errors(spark):
         g.create_nodes([(NODE1, Prop("Text", "changed content"))])
 
 
+def test_create_nodes_repeated_id_in_batch_errors(spark):
+    """The reference creates one node at a time, so the second create of
+    an id in the same batch fails (kv_graph_store.rs:545-547)."""
+    g = PropertyGraph.empty(spark, RAW)
+    with pytest.raises(NodeExistsError):
+        g.create_nodes([(NODE1, TEXT_PROP), (NODE1, Prop("Text", "other"))])
+    with pytest.raises(NodeExistsError):
+        g.create_nodes([(NODE1, TEXT_PROP), (NODE2, TEXT_PROP), (NODE1, TEXT_PROP)])
+    assert g.vertices.count() == 0
+
+
+def test_update_nodes_repeated_id_last_wins(spark):
+    g, _ = PropertyGraph.empty(spark, RAW).create_nodes(
+        [(NODE1, TEXT_PROP), (NODE2, Prop("Text", "other"))]
+    )
+    g = g.update_nodes(
+        [(NODE1, Prop("Text", "v2")), (NODE2, Prop("Text", "w2")), (NODE1, Prop("Text", "v3"))]
+    ).gc()
+    h3, w2 = prop_hash("Text", "v3"), prop_hash("Text", "w2")
+    assert rows(g.vertices) == sorted([(NODE1, h3), (NODE2, w2)])
+    assert rows(g.prop_refs) == sorted([(h3, "node", NODE1), (w2, "node", NODE2)])
+    assert sorted(r["prop_hash"] for r in g.properties.collect()) == sorted([h3, w2])
+
+
 def test_self_loop_edge_adjacency(spark):
     g, _ = PropertyGraph.empty(spark, RAW).create_nodes([(NODE1, TEXT_PROP)])
     g, eids = g.create_edges([(NODE1, NODE1, Prop("Text", "loop"))])
